@@ -9,7 +9,7 @@ Two tiers, mirroring the reference's design (SURVEY.md §2.1 O1/O2):
   adaptive_ivf.mjs:23-30.
 
 - **NumPy batch kernel** (`l2_batch`): the `x²+y²-2xyᵀ` matmul trick for
-  all-pairs distances, used inside Arrow-backed `mapInPandas` operators.
+  all-pairs distances, used inside Arrow-backed scan operators.
   Reference: ``l2_batch`` at ipynb c1:11-14 / adaptive_ivf.mjs:32-40.
   This is the hot path for kNN — one BLAS matmul per (partition,
   query-block) instead of a crossJoin, so the shuffle carries only local
@@ -192,26 +192,6 @@ def l2_argmin(x: np.ndarray, y: np.ndarray, tile: int = 2048,
     return out
 
 
-def topk_indices(arr: np.ndarray, k: int) -> np.ndarray:
-    """Indices of the k smallest values, ascending (ties by index asc).
-
-    `argpartition` O(n) selection then a sort of only the candidate set
-    — reference `topk_indices` at ipynb c1:16-20 / adaptive_ivf.mjs:50-56.
-    Plain `argpartition(...)[:k]` picks ARBITRARILY among values tied at
-    the k-boundary, which breaks the (value, index) tie-break contract;
-    include every element tied with the boundary value before sorting.
-    """
-    arr = np.asarray(arr).ravel()
-    k = min(k, arr.shape[0])
-    if k <= 0:
-        return np.empty(0, dtype=np.int64)
-    part = np.argpartition(arr, k - 1)
-    kth_val = arr[part[k - 1]]
-    cand = np.flatnonzero(arr <= kth_val)   # k smallest + boundary ties
-    order = np.lexsort((cand, arr[cand]))   # value asc, index asc
-    return cand[order][:k]
-
-
 def topk_cols_2d(vals: np.ndarray, ids: np.ndarray, kk: int,
                  descending: bool = False) -> np.ndarray:
     """Per-row top-kk column positions of ``vals`` [nq, m] under the
@@ -231,13 +211,29 @@ def topk_cols_2d(vals: np.ndarray, ids: np.ndarray, kk: int,
     return id_order[sel]
 
 
-def arrow_vectors_to_matrix(col) -> np.ndarray:
-    """Arrow list<float> column → [n, d] float64 matrix via the flat
-    values buffer — no per-row Python objects (np.vstack over an
-    object column is 10-50× slower and dominates mapInPandas kernels).
-    Assumes fixed-length vectors (enforced by the corpus schema)."""
-    flat = col.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
+def arrow_vectors_to_matrix(col, width: int | None = None,
+                            dtype=np.float64) -> np.ndarray:
+    """Arrow list column → [n, width] matrix via the flat values
+    buffer — no per-row Python objects (np.vstack over an object column
+    is 10-50× slower and dominates Python-UDF kernels). ``dtype=None``
+    keeps the stored element type (integer code columns).
+
+    With ``width`` given, a null row or a row of any other length
+    raises instead of being reshaped: np.vstack rejects ragged rows,
+    while a reshape of the flat buffer would silently realign every
+    row after the odd one (even when the total length happens to be
+    rows × width)."""
     n = len(col)
+    if width is not None and n and (
+            col.null_count
+            or (col.value_lengths().to_numpy(zero_copy_only=False)
+                != width).any()):
+        raise ValueError(
+            f"vector column has null or wrong-length rows; every "
+            f"vector must have length {width}")
+    flat = col.flatten().to_numpy(zero_copy_only=False)
+    if dtype is not None:
+        flat = flat.astype(dtype)
     if n == 0:
-        return flat.reshape(0, 0)
-    return flat.reshape(n, len(flat) // n)
+        return flat.reshape(0, width or 0)
+    return flat.reshape(n, width or len(flat) // n)

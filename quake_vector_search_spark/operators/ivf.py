@@ -36,7 +36,6 @@ from pyspark.sql import functions as F
 from quake_vector_search_spark.functions.vector import (
     l2_argmin,
     l2_batch,
-    topk_cols_2d,
 )
 from quake_vector_search_spark.operators.kmeans import local_kmeans
 from quake_vector_search_spark.windowing import (
@@ -1569,11 +1568,11 @@ class IVFIndex:
 
         Round 17 (ADVICE r16 #2/#3): the dict is deep-copied so the
         caller's snapshot and the installed fit can't alias nested
-        lists, and a ``state_token`` stamped at fit time (version dir +
-        partition ids/sizes digest) is validated — reinstalling a fit
-        over intervening DML/maintenance raises instead of silently
-        serving stale cutoffs (token-less dicts, e.g. hand-built in
-        tests, skip the check)."""
+        lists, and a ``state_token`` stamped at fit time (version
+        number + partition ids/sizes + centroid digest) is validated —
+        reinstalling a fit over intervening DML/maintenance raises
+        instead of silently serving stale cutoffs (token-less dicts,
+        e.g. hand-built in tests, skip the check)."""
         import copy
 
         tok = cal.get("state_token")
@@ -1587,15 +1586,17 @@ class IVFIndex:
 
     def _calibration_state_token(self) -> str:
         """Digest of the index state a calibration fit depends on:
-        the published version dir, the partition ids/sizes, AND the
-        centroid geometry (fine + coarse) — ``partition_scores`` and
-        the fitted cutoffs are functions of the centroids, and
-        ``recompute_centroids`` (or a net-zero DML round trip) can
-        change them while leaving ids/sizes/version intact."""
+        the published version number (not the version dir's path, so
+        one index opened by absolute and by relative path agrees), the
+        partition ids/sizes, AND the centroid geometry (fine + coarse)
+        — ``partition_scores`` and the fitted cutoffs are functions of
+        the centroids, and ``recompute_centroids`` (or a net-zero DML
+        round trip) can change them while leaving ids/sizes/version
+        intact."""
         import hashlib
 
         h = hashlib.sha256()
-        h.update(str(self.version_dir).encode())
+        h.update(str(int(self.version)).encode())
         h.update(np.ascontiguousarray(self.part_ids).tobytes())
         h.update(np.ascontiguousarray(self.sizes).tobytes())
         h.update(np.ascontiguousarray(self.centroids).tobytes())
@@ -1742,7 +1743,7 @@ class IVFIndex:
                     "auto-running calibrate(route_cells="
                     f"{asked}) inside the search call. Prefer an "
                     "eager fit at version-publish time.",
-                    RuntimeWarning, stacklevel=3)
+                    RuntimeWarning, stacklevel=4)
                 self.calibrate(route_cells=asked)
             # asked None → _calibrated_rule auto-fits full
         else:
@@ -1798,50 +1799,23 @@ class IVFIndex:
         avg_nprobe / avg_scanned; avg_scanned counts probed-partition
         sizes pre-filter). Increments hit stats (O11).
         """
-        from quake_vector_search_spark.operators.knn import _collect_queries
+        from quake_vector_search_spark.operators.knn import (
+            _collect_queries, _l2_scores, scan_topk)
         qids, qmat = _collect_queries(queries, query_id_col, query_vec_col)
         if self.metric == "cosine" and len(qids):
             qmat = qmat / (np.linalg.norm(qmat, axis=1, keepdims=True)
                            + 1e-12)
-        nq = len(qids)
-        if nq == 0:
-            score_col = "sim" if self.metric == "cosine" else "dist"
-            empty = self.spark.createDataFrame(
-                [], f"query_id long, vec_id long, {score_col} double, "
-                    "rank int")
-            return empty, {"nprobe": [], "avg_nprobe": 0.0,
-                           "avg_scanned": 0.0,
-                           "n_partitions": len(self.part_ids)}
-        if policy == "calibrated":
-            self._check_calibrated_restriction(route_cells)
-        order, probs = self.partition_scores(qmat, route_cells=route_cells)
-        nprobe = self._decide_nprobe(probs, target_recall, max_probe,
-                                     policy)
-
-        # probe sets (positions → stable partition ids)
-        probe_map: dict[int, list[int]] = {}
-        scanned = 0
-        for qi in range(nq):
-            pos = order[qi, :nprobe[qi]]
-            scanned += int(self.sizes[pos].sum())
-            for p in self.part_ids[pos]:
-                probe_map.setdefault(int(p), []).append(qi)
-        # O11 hit accounting
-        for pid, qlist in probe_map.items():
-            self.hits[pid] = self.hits.get(pid, 0) + len(qlist)
-        self.query_counter += nq
+        if len(qids) == 0:
+            return self._empty_search(
+                "sim" if self.metric == "cosine" else "dist")
+        probe_map, meta = self._plan_probes(qmat, target_recall, max_probe,
+                                            policy, route_cells, "search")
 
         union_parts = sorted(probe_map)
-        corpus = self.read_corpus(partition_ids=union_parts) \
-            .select(self.id_col, self.vec_col, "partition_id")
-        if allowed is not None:
-            if len(allowed.columns) != 1:
-                raise ValueError(
-                    f"search(allowed=...): expected a single-column id "
-                    f"DataFrame, got columns {allowed.columns}")
-            ids = allowed.select(
-                F.col(allowed.columns[0]).alias(self.id_col))
-            corpus = corpus.join(F.broadcast(ids), self.id_col, "semi")
+        corpus = self._restrict_to_allowed(
+            self.read_corpus(partition_ids=union_parts)
+            .select(self.id_col, self.vec_col, "partition_id"),
+            allowed, "search")
         # Size tasks by scanned volume, not directory count: the pruned
         # scan otherwise yields one task per probed partition dir, and a
         # mostly-empty Python task costs ~20-30 ms of Arrow/worker
@@ -1855,51 +1829,9 @@ class IVFIndex:
         n_tasks = max(1, -(-est_rows // ROWS_PER_TASK))
         if n_tasks < len(union_parts):
             corpus = corpus.coalesce(n_tasks)
-        bc = self.spark.sparkContext.broadcast((qids, qmat, probe_map))
-        id_col, vec_col = self.id_col, self.vec_col
-
-        def local_topk(batches):
-            import pyarrow as pa
-
-            from quake_vector_search_spark.functions.vector import (
-                arrow_vectors_to_matrix,
-            )
-            qids_l, qmat_l, pmap = bc.value
-            for rb in batches:
-                if rb.num_rows == 0:
-                    continue
-                all_vecs = arrow_vectors_to_matrix(rb.column(vec_col))
-                all_ids = rb.column(id_col).to_numpy(
-                    zero_copy_only=False).astype(np.int64)
-                pids = rb.column("partition_id").to_numpy(
-                    zero_copy_only=False).astype(np.int64)
-                out_q, out_i, out_d = [], [], []
-                for pid in np.unique(pids):
-                    qidx = pmap.get(int(pid))
-                    if not qidx:
-                        continue
-                    mask = pids == pid
-                    vecs, ids = all_vecs[mask], all_ids[mask]
-                    d2 = l2_batch(qmat_l[qidx], vecs)
-                    kk = min(k, len(ids))
-                    part = topk_cols_2d(d2, ids, kk)
-                    out_q.append(np.repeat(qids_l[qidx], kk))
-                    out_i.append(ids[part].ravel())
-                    out_d.append(np.take_along_axis(d2, part, axis=1)
-                                 .ravel())
-                if out_q:
-                    yield pa.RecordBatch.from_arrays(
-                        [pa.array(np.concatenate(out_q)),
-                         pa.array(np.concatenate(out_i)),
-                         pa.array(np.concatenate(out_d))],
-                        ["query_id", "vec_id", "dist"])
-
-        local = corpus.mapInArrow(
-            local_topk, "query_id long, vec_id long, dist double")
-        w = (Window.partitionBy("query_id")
-             .orderBy(F.col("dist").asc(), F.col("vec_id").asc()))
-        ranked = (local.withColumn("rank", F.row_number().over(w))
-                  .where(F.col("rank") <= k))
+        ranked = scan_topk(corpus, qids, qmat, _l2_scores, k,
+                           width=qmat.shape[1], id_col=self.id_col,
+                           vec_col=self.vec_col, probe_map=probe_map)
         if self.metric == "cosine":
             # unit vectors: d2 = 2 - 2·cos  →  cos = 1 - d2/2; rank by
             # d2 asc ≡ sim desc, tie-break unchanged
@@ -1908,13 +1840,64 @@ class IVFIndex:
         else:
             out = (ranked.withColumn("dist", F.sqrt(F.col("dist")))
                    .select("query_id", "vec_id", "dist", "rank"))
+        return out, meta
+
+    def _empty_search(self, score_col: str) -> tuple[DataFrame, dict]:
+        """(empty result, meta) of a search call given no queries."""
+        from quake_vector_search_spark.operators.knn import _empty_result
+
+        return _empty_result(self.spark, score_col), {
+            "nprobe": [], "avg_nprobe": 0.0, "avg_scanned": 0.0,
+            "n_partitions": len(self.part_ids)}
+
+    def _plan_probes(self, qmat: np.ndarray, target_recall: float,
+                     max_probe: int, policy: str, route_cells,
+                     caller: str) -> tuple[dict[int, list[int]], dict]:
+        """The probe planner shared by search() and the IVF+PQ hybrid:
+        APS scores → probe counts (``_decide_nprobe``) → probe map
+        {partition id → positions of the queries probing it}, with the
+        O11 hit accounting. Returns (probe_map, meta) where meta holds
+        nprobe / avg_nprobe / avg_scanned (probed-partition sizes,
+        pre-filter) / n_partitions."""
+        if policy == "calibrated":
+            self._check_calibrated_restriction(route_cells, caller=caller)
+        order, probs = self.partition_scores(qmat, route_cells=route_cells)
+        nprobe = self._decide_nprobe(probs, target_recall, max_probe,
+                                     policy)
+        nq = len(qmat)
+        # probe sets (positions → stable partition ids)
+        probe_map: dict[int, list[int]] = {}
+        scanned = 0
+        for qi in range(nq):
+            pos = order[qi, :nprobe[qi]]
+            scanned += int(self.sizes[pos].sum())
+            for p in self.part_ids[pos]:
+                probe_map.setdefault(int(p), []).append(qi)
+        # O11 hit accounting
+        for pid, qlist in probe_map.items():
+            self.hits[pid] = self.hits.get(pid, 0) + len(qlist)
+        self.query_counter += nq
         meta = {
             "nprobe": nprobe.tolist(),
-            "avg_nprobe": float(nprobe.mean()) if nq else 0.0,
-            "avg_scanned": scanned / nq if nq else 0.0,
+            "avg_nprobe": float(nprobe.mean()),
+            "avg_scanned": scanned / nq,
             "n_partitions": len(self.part_ids),
         }
-        return out, meta
+        return probe_map, meta
+
+    def _restrict_to_allowed(self, frame: DataFrame,
+                             allowed: DataFrame | None,
+                             caller: str) -> DataFrame:
+        """The ``allowed`` pre-filter: a broadcast semi-join of the
+        single-column id DataFrame ahead of the scan kernel."""
+        if allowed is None:
+            return frame
+        if len(allowed.columns) != 1:
+            raise ValueError(
+                f"{caller}(allowed=...): expected a single-column id "
+                f"DataFrame, got columns {allowed.columns}")
+        ids = allowed.select(F.col(allowed.columns[0]).alias(self.id_col))
+        return frame.join(F.broadcast(ids), self.id_col, "semi")
 
 
 # ------------------------------------------------------------------ APS

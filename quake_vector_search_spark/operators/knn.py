@@ -1,4 +1,5 @@
-"""Brute-force exact kNN over a DataFrame corpus.
+"""Brute-force exact kNN over a DataFrame corpus, and the engine's one
+map-side top-k scan (``scan_topk``) that every vector search path runs.
 
 Reference parity: ``exact_topk`` (QUAKE_working_demo.ipynb c1:212-215 /
 adaptive_ivf.mjs:364-369) — full-scan ground truth, also the oracle for
@@ -6,23 +7,27 @@ the IVF path (O15 in SURVEY.md §2.1).
 
 Scale design (the part the reference, a single-process NumPy loop,
 doesn't have): queries are broadcast to every corpus partition; each
-partition computes a *local* top-k per query with one BLAS matmul
-(`l2_batch`, the x²+y²−2xyᵀ trick) and emits at most k rows per query —
-so the single shuffle carries O(partitions · nq · k) candidate rows,
-never the O(n · nq) distance matrix, and never a crossJoin. The global
-stage is a window `row_number() <= k` with deterministic
-(dist ASC, vec_id ASC) tie-break. At 1000 executors this is an
-embarrassingly-parallel scan + a tiny shuffle.
+Arrow batch computes a *local* top-k per query from one score matrix
+(for L2 one BLAS matmul, `l2_batch`, the x²+y²−2xyᵀ trick) and emits at
+most k rows per query — so the single shuffle carries
+O(partitions · nq · k) candidate rows, never the O(n · nq) distance
+matrix, and never a crossJoin. The global stage is a window
+`row_number() <= k` with deterministic (score, vec_id ASC) tie-break.
+At 1000 executors this is an embarrassingly-parallel scan + a tiny
+shuffle. ``scan_topk`` owns that whole shape; the brute-force
+operators below, ``IVFIndex.search`` and the quantized scans
+(PQ/OPQ ADC, IVF+PQ, binary hamming, anisotropic MIPS) each supply
+only a scorer and a direction.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from quake_vector_search_spark.functions.vector import (
+    arrow_vectors_to_matrix,
     l2_batch,
     topk_cols_2d,
 )
@@ -56,6 +61,110 @@ def _empty_result(spark, score_col: str) -> DataFrame:
         [], f"query_id long, vec_id long, {score_col} double, rank int")
 
 
+def scan_topk(frame: DataFrame, qids: np.ndarray, qdata, score, k: int,
+              *, width: int, id_col: str = "vec_id",
+              vec_col: str = "embedding", out_id_col: str = "vec_id",
+              score_col: str = "dist", descending: bool = False,
+              probe_map: dict | None = None) -> DataFrame:
+    """Exact top-``k`` per query of ``score`` over ``frame`` — the one
+    map-side top-k scan behind every vector search path.
+
+    ``(qids, qdata, probe_map)`` is broadcast once. One ``mapInArrow``
+    pass decodes each non-empty batch's ``vec_col`` (a list column of
+    ``width`` values per row, integer codes kept as stored) and calls
+    ``score(qdata, qpos, rows, pid) -> [len(qpos), n]``, where ``qpos``
+    selects the query rows of ``qdata`` to score (``slice(None)`` for
+    all of them). Without a probe map that is one call per batch with
+    ``pid=None``; with ``probe_map`` ({partition id → query positions})
+    the batch's rows are grouped by ``partition_id`` and each group is
+    scored only against the queries that probe it (``score`` may return
+    None to drop a group). Per call the local top-k is taken under the
+    engine tie-break (``topk_cols_2d``: score asc — or desc — then id
+    asc); the global ``row_number()`` window over the same total order
+    keeps ``rank <= k``.
+
+    Returns (query_id, ``out_id_col``, ``score_col``, rank)."""
+    bc = frame.sparkSession.sparkContext.broadcast((qids, qdata, probe_map))
+    cols = [id_col, vec_col] + ([] if probe_map is None
+                                else ["partition_id"])
+
+    def local_topk(batches):
+        import pyarrow as pa
+
+        qids_l, qdata_l, pmap = bc.value
+        for rb in batches:
+            if rb.num_rows == 0:
+                continue
+            rows = arrow_vectors_to_matrix(rb.column(vec_col), width,
+                                           dtype=None)
+            ids = rb.column(id_col).to_numpy(
+                zero_copy_only=False).astype(np.int64)
+            if pmap is None:
+                groups = [(slice(None), None, slice(None))]
+            else:
+                pids = rb.column("partition_id").to_numpy(
+                    zero_copy_only=False).astype(np.int64)
+                groups = [(pmap[p], p, pids == p)
+                          for p in map(int, np.unique(pids)) if pmap.get(p)]
+            out_q, out_i, out_s = [], [], []
+            for qpos, pid, sel in groups:
+                g_ids = ids[sel]
+                s = score(qdata_l, qpos, rows[sel], pid)
+                if s is None:
+                    continue
+                kk = min(k, len(g_ids))
+                part = topk_cols_2d(s, g_ids, kk, descending=descending)
+                out_q.append(np.repeat(qids_l[qpos], kk))
+                out_i.append(g_ids[part].ravel())
+                out_s.append(np.take_along_axis(s, part, axis=1)
+                             .ravel().astype(np.float64, copy=False))
+            if out_q:
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(np.concatenate(out_q)),
+                     pa.array(np.concatenate(out_i)),
+                     pa.array(np.concatenate(out_s))],
+                    ["query_id", out_id_col, score_col])
+
+    if frame.columns != cols:
+        frame = frame.select(*cols)
+    local = frame.mapInArrow(
+        local_topk,
+        f"query_id long, {out_id_col} long, {score_col} double")
+    order = F.col(score_col).desc() if descending else F.col(score_col).asc()
+    w = (Window.partitionBy("query_id")
+         .orderBy(order, F.col(out_id_col).asc()))
+    return (local.withColumn("rank", F.row_number().over(w))
+            .where(F.col("rank") <= k))
+
+
+def _l2_scores(qmat, qpos, rows, _pid):
+    return l2_batch(qmat[qpos], rows)
+
+
+def _dot_scores(qmat, qpos, rows, _pid):
+    return qmat[qpos] @ rows.astype(np.float64).T
+
+
+def _cosine_scores(qmat, qpos, rows, _pid):
+    q = qmat[qpos]
+    vecs = rows.astype(np.float64)
+    qnorm = np.linalg.norm(q, axis=1) + 1e-12
+    vnorm = np.linalg.norm(vecs, axis=1) + 1e-12
+    return (q @ vecs.T) / (qnorm[:, None] * vnorm[None, :])
+
+
+def _exact_topk(corpus_df, queries, k, id_col, vec_col, query_id_col,
+                query_vec_col, score, score_col, descending) -> DataFrame:
+    """The brute-force operators: every corpus row scored against the
+    collected query block, top-k under (score, vec_id ASC)."""
+    qids, qmat = _collect_queries(queries, query_id_col, query_vec_col)
+    if len(qids) == 0:
+        return _empty_result(corpus_df.sparkSession, score_col)
+    return scan_topk(corpus_df, qids, qmat, score, k, width=qmat.shape[1],
+                     id_col=id_col, vec_col=vec_col, score_col=score_col,
+                     descending=descending)
+
+
 def knn_bruteforce(corpus_df: DataFrame,
                    queries,
                    k: int = 10,
@@ -70,38 +179,9 @@ def knn_bruteforce(corpus_df: DataFrame,
     1..k per query ordered by (dist ASC, vec_id ASC). ``dist`` is L2
     (or squared L2 when ``squared=True``, matching the reference's d2).
     """
-    spark = corpus_df.sparkSession
-    qids, qmat = _collect_queries(queries, query_id_col, query_vec_col)
-    if len(qids) == 0:
-        return _empty_result(spark, "dist")
-    bq = spark.sparkContext.broadcast((qids, qmat))
-
-    def local_topk(batches):
-        qids_l, qmat_l = bq.value
-        nq = qids_l.shape[0]
-        for pdf in batches:
-            if len(pdf) == 0 or nq == 0:
-                continue
-            vecs = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            d2 = l2_batch(qmat_l, vecs)                  # [nq, nb]
-            kk = min(k, vecs.shape[0])
-            part = topk_cols_2d(d2, ids, kk)
-            d2k = np.take_along_axis(d2, part, axis=1)
-            yield pd.DataFrame({
-                "query_id": np.repeat(qids_l, kk),
-                "vec_id": ids[part].ravel(),
-                "dist": d2k.ravel(),
-            })
-
-    local = (corpus_df.select(id_col, vec_col)
-             .mapInPandas(local_topk, "query_id long, vec_id long, dist double"))
-
-    w = (Window.partitionBy("query_id")
-         .orderBy(F.col("dist").asc(), F.col("vec_id").asc()))
-    out = (local
-           .withColumn("rank", F.row_number().over(w))
-           .where(F.col("rank") <= k))
+    out = _exact_topk(corpus_df, queries, k, id_col, vec_col,
+                      query_id_col, query_vec_col, _l2_scores, "dist",
+                      False)
     if not squared:
         out = out.withColumn("dist", F.sqrt(F.col("dist")))
     return out.select("query_id", "vec_id", "dist", "rank")
@@ -116,39 +196,9 @@ def cosine_topk(corpus_df: DataFrame,
                 query_vec_col: str = "embedding") -> DataFrame:
     """Exact top-k by cosine similarity (descending), same batch shape as
     `knn_bruteforce`. Tie-break (sim DESC, vec_id ASC)."""
-    spark = corpus_df.sparkSession
-    qids, qmat = _collect_queries(queries, query_id_col, query_vec_col)
-    if len(qids) == 0:
-        return _empty_result(spark, "sim")
-    qnorm = np.linalg.norm(qmat, axis=1) + 1e-12
-    bq = spark.sparkContext.broadcast((qids, qmat, qnorm))
-
-    def local_topk(batches):
-        qids_l, qmat_l, qnorm_l = bq.value
-        for pdf in batches:
-            if len(pdf) == 0 or qids_l.shape[0] == 0:
-                continue
-            vecs = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            vnorm = np.linalg.norm(vecs, axis=1) + 1e-12
-            sim = (qmat_l @ vecs.T) / (qnorm_l[:, None] * vnorm[None, :])
-            kk = min(k, vecs.shape[0])
-            part = topk_cols_2d(sim, ids, kk, descending=True)
-            simk = np.take_along_axis(sim, part, axis=1)
-            yield pd.DataFrame({
-                "query_id": np.repeat(qids_l, kk),
-                "vec_id": ids[part].ravel(),
-                "sim": simk.ravel(),
-            })
-
-    local = (corpus_df.select(id_col, vec_col)
-             .mapInPandas(local_topk, "query_id long, vec_id long, sim double"))
-    w = (Window.partitionBy("query_id")
-         .orderBy(F.col("sim").desc(), F.col("vec_id").asc()))
-    return (local
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", "vec_id", "sim", "rank"))
+    return _exact_topk(corpus_df, queries, k, id_col, vec_col,
+                       query_id_col, query_vec_col, _cosine_scores, "sim",
+                       True)
 
 
 def dot_topk(corpus_df: DataFrame,
@@ -162,38 +212,9 @@ def dot_topk(corpus_df: DataFrame,
     used by unnormalized-embedding retrieval. Same batch shape as
     `knn_bruteforce`: one matmul per (query block, corpus batch), local
     top-k, global windowed top-k. Tie-break (score DESC, vec_id ASC)."""
-    spark = corpus_df.sparkSession
-    qids, qmat = _collect_queries(queries, query_id_col, query_vec_col)
-    if len(qids) == 0:
-        return _empty_result(spark, "score")
-    bq = spark.sparkContext.broadcast((qids, qmat))
-
-    def local_topk(batches):
-        qids_l, qmat_l = bq.value
-        for pdf in batches:
-            if len(pdf) == 0 or qids_l.shape[0] == 0:
-                continue
-            vecs = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            score = qmat_l @ vecs.T
-            kk = min(k, vecs.shape[0])
-            part = topk_cols_2d(score, ids, kk, descending=True)
-            sk = np.take_along_axis(score, part, axis=1)
-            yield pd.DataFrame({
-                "query_id": np.repeat(qids_l, kk),
-                "vec_id": ids[part].ravel(),
-                "score": sk.ravel(),
-            })
-
-    local = (corpus_df.select(id_col, vec_col)
-             .mapInPandas(local_topk,
-                          "query_id long, vec_id long, score double"))
-    w = (Window.partitionBy("query_id")
-         .orderBy(F.col("score").desc(), F.col("vec_id").asc()))
-    return (local
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", "vec_id", "score", "rank"))
+    return _exact_topk(corpus_df, queries, k, id_col, vec_col,
+                       query_id_col, query_vec_col, _dot_scores, "score",
+                       True)
 
 
 def hard_negatives(corpus_df: DataFrame, queries_df: DataFrame,

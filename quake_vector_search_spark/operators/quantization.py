@@ -116,10 +116,19 @@ def exact_rerank(cand: DataFrame, corpus_df: DataFrame, queries,
     the full corpus is touched only via the id equi-join."""
     from quake_vector_search_spark.functions.vector import l2_col
 
+    return _rerank(cand, corpus_df, queries, k, id_col, vec_col,
+                   "dist", l2_col, descending=False)
+
+
+def _rerank(cand: DataFrame, corpus_df: DataFrame, queries, k: int,
+            id_col: str, vec_col: str, score_col: str, score_fn,
+            descending: bool) -> DataFrame:
+    """``exact_rerank`` under any (score column, direction) pair:
+    ``score_fn(full_vec_col, query_vec_col)`` is the exact score, ranked
+    by (score asc|desc, id asc)."""
     full = corpus_df.select(F.col(id_col), F.col(vec_col).alias("_fv"))
     qdf = (queries if isinstance(queries, DataFrame) else None)
     if qdf is None:
-        import pandas as pd
         qids, qmat = queries
         spark = corpus_df.sparkSession
         qdf = spark.createDataFrame(
@@ -132,12 +141,25 @@ def exact_rerank(cand: DataFrame, corpus_df: DataFrame, queries,
     rer = (cand.select("query_id", id_col)
            .join(full, id_col)
            .join(F.broadcast(qv), "query_id")
-           .withColumn("dist", l2_col("_fv", "_qv")))
+           .withColumn(score_col, score_fn("_fv", "_qv")))
+    order = F.col(score_col).desc() if descending else F.col(score_col).asc()
     w = (Window.partitionBy("query_id")
-         .orderBy(F.col("dist").asc(), F.col(id_col).asc()))
+         .orderBy(order, F.col(id_col).asc()))
     return (rer.withColumn("rank", F.row_number().over(w))
             .where(F.col("rank") <= k)
-            .select("query_id", id_col, "dist", "rank"))
+            .select("query_id", id_col, score_col, "rank"))
+
+
+def _adc_scores(luts, qpos, codes, _pid):
+    """Asymmetric distance (or inner-product) computation over one
+    block of PQ codes: ``Σ_j luts[j][q, codes[:, j]]`` → [nq, n], the
+    per-query [m, ksub] tables (``luts`` [m, nq, ksub]) gathered once
+    per subspace — no float vector is read during the scan."""
+    luts = luts[:, qpos]
+    approx = np.zeros((luts.shape[1], codes.shape[0]))
+    for j in range(luts.shape[0]):
+        approx += luts[j][:, codes[:, j]]
+    return approx
 
 
 # ---------------------------------------------------------------- PQ
@@ -364,45 +386,16 @@ def _pq_adc_candidates(enc: DataFrame, books: np.ndarray,
     code row scored with m table gathers, per-batch top-kk, global
     windowed top-kk → (query_id, id) candidate set. ``qmat`` must live
     in the SAME space the codebooks were trained in (rotated for OPQ)."""
-    import pandas as pd
+    from quake_vector_search_spark.functions.vector import l2_batch
+    from quake_vector_search_spark.operators.knn import scan_topk
 
-    from quake_vector_search_spark.functions.vector import (
-        l2_batch, topk_cols_2d)
-
-    spark = enc.sparkSession
     mm, _ksub, dsub = books.shape
     luts = np.stack([
         l2_batch(qmat[:, j * dsub:(j + 1) * dsub], books[j])
         for j in range(mm)])                                  # [m, nq, ksub]
-    bc = spark.sparkContext.broadcast((qids, luts))
-
-    def adc_topk(batches):
-        qids_l, luts_l = bc.value
-        nq = qids_l.shape[0]
-        for pdf in batches:
-            if len(pdf) == 0 or nq == 0:
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            codes = np.vstack(pdf["pq_codes"].to_numpy())     # [n, m]
-            approx = np.zeros((nq, codes.shape[0]))
-            for j in range(luts_l.shape[0]):
-                approx += luts_l[j][:, codes[:, j]]           # [nq, n]
-            kk = min(kk_cand, codes.shape[0])
-            part = topk_cols_2d(approx, ids, kk)
-            d2k = np.take_along_axis(approx, part, axis=1)
-            yield pd.DataFrame({
-                "query_id": np.repeat(qids_l, kk),
-                id_col: ids[part].ravel(),
-                "dist": d2k.ravel(),
-            })
-
-    local = enc.mapInPandas(adc_topk,
-                            f"query_id long, {id_col} long, dist double")
-    from pyspark.sql import Window
-    w = (Window.partitionBy("query_id")
-         .orderBy(F.col("dist").asc(), F.col(id_col).asc()))
-    return (local.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= kk_cand)
+    return (scan_topk(enc, qids, luts, _adc_scores, kk_cand, width=mm,
+                      id_col=id_col, vec_col="pq_codes",
+                      out_id_col=id_col)
             .select("query_id", id_col))
 
 
@@ -2188,11 +2181,9 @@ def knn_ivf_pq(index, queries, k: int = 10, target_recall: float = 0.9,
     """
     import os
 
-    from quake_vector_search_spark.functions.vector import (
-        l2_batch, topk_cols_2d)
+    from quake_vector_search_spark.functions.vector import l2_batch
     from quake_vector_search_spark.operators.knn import (
-        _collect_queries, _empty_result)
-    from pyspark.sql import Window
+        _collect_queries, scan_topk)
 
     if index.metric not in ("l2", "cosine"):
         raise NotImplementedError(
@@ -2245,35 +2236,17 @@ def knn_ivf_pq(index, queries, k: int = 10, target_recall: float = 0.9,
         qmat_adc = (qmat - rz["mean"]) @ rot_R.T
     else:
         qmat_adc = qmat
-    nq = len(qids)
-    if nq == 0:
-        return (_empty_result(spark, "dist"),
-                {"nprobe": [], "avg_nprobe": 0.0, "avg_scanned": 0.0,
-                 "n_partitions": len(index.part_ids)})
+    if len(qids) == 0:
+        return index._empty_search("dist")
 
-    # same probe-count rule as IVFIndex.search — incl. the calibrated
+    # same probe planner as IVFIndex.search — incl. the calibrated
     # temperature/cutoff fit when policy="calibrated", and (round 7)
     # the same two-level ``route_cells`` restriction: the compressed
     # path serves >10⁵-partition deployments too, where even the full
     # per-query centroid scan is a cost. A fit's recorded restriction
     # must match the call's (shared check with search()).
-    if policy == "calibrated":
-        index._check_calibrated_restriction(route_cells,
-                                            caller="knn_ivf_pq")
-    order, probs = index.partition_scores(qmat,
-                                          route_cells=route_cells)
-    nprobe = index._decide_nprobe(probs, target_recall, max_probe,
-                                  policy)
-    probe_map: dict[int, list[int]] = {}
-    scanned = 0
-    for qi in range(nq):
-        pos = order[qi, :nprobe[qi]]
-        scanned += int(index.sizes[pos].sum())
-        for p in index.part_ids[pos]:
-            probe_map.setdefault(int(p), []).append(qi)
-    for pid, qlist in probe_map.items():
-        index.hits[pid] = index.hits.get(pid, 0) + len(qlist)
-    index.query_counter += nq
+    probe_map, meta = index._plan_probes(qmat, target_recall, max_probe,
+                                         policy, route_cells, "knn_ivf_pq")
 
     # residual sidecars (IVFADC) quantize x − c_p, so the ADC tables
     # must come from q − c_p PER PROBED PARTITION — built inside the
@@ -2301,7 +2274,7 @@ def knn_ivf_pq(index, queries, k: int = 10, target_recall: float = 0.9,
             local_rots = {p: r for p, r in local_rots.items()
                           if p in probe_map}
     else:
-        mm, ksub_eff, dsub = books.shape
+        mm, _ksub, dsub = books.shape
     if residual:
         # LUTs must use the ENCODE-TIME centroids (snapshot persisted
         # by the sidecar build), not the live ones DML has drifted;
@@ -2319,105 +2292,52 @@ def knn_ivf_pq(index, queries, k: int = 10, target_recall: float = 0.9,
             # q_rot − c_rot exactly in the encode space
             cent_by_pid = {p: c @ rot_R.T
                            for p, c in cent_by_pid.items()}
-        bc = spark.sparkContext.broadcast(
-            (qids, qmat_adc, probe_map, books, cent_by_pid,
-             local_rots, sq8_params))
+        qdata = (qmat_adc, books, cent_by_pid, local_rots, sq8_params)
+
+        # NOTE: the scorer's closure reads the ``local``/``sq8`` FLAGS
+        # and cloudpickle captures the cells at pickle time — do not
+        # rebind those names below this point
+        def score(qd, qpos, cds, pid):
+            qmat_l, books_l, cents_l, rots_l, sq8_l = qd
+            qres = qmat_l[qpos] - cents_l[pid]
+            if sq8:
+                # scalar quantizer: decode codes to residual vectors
+                # (one multiply-add per dim) and take exact squared L2
+                # against q − c_p — no LUTs, no codebooks
+                return l2_batch(qres, cds * sq8_l["scale"] + sq8_l["vmin"])
+            # local sidecar: this partition's own books
+            bk = books_l.get(pid) if local else books_l
+            if bk is None:
+                return None
+            rot = rots_l.get(pid) if local and rots_l else None
+            if rot is not None:
+                # full LOPQ: codes live in THIS cell's rotated space
+                qres = (qres - rot["mean"]) @ rot["components"].T
+            approx = np.zeros((len(qres), cds.shape[0]))
+            for j in range(bk.shape[0]):
+                lut_j = l2_batch(qres[:, j * dsub:(j + 1) * dsub], bk[j])
+                approx += lut_j[:, cds[:, j]]
+            return approx
     else:
-        luts = np.stack([
+        qdata = np.stack([
             l2_batch(qmat_adc[:, j * dsub:(j + 1) * dsub], books[j])
             for j in range(mm)])
-        bc = spark.sparkContext.broadcast((qids, luts, probe_map))
+        score = _adc_scores
     kk_cand = k * oversample
     id_col = index.id_col
 
     ids_sql = ",".join(str(p) for p in sorted(probe_map))
     codes = (spark.read.parquet(os.path.join(index.version_dir, "pq"))
              .where(F.expr(f"partition_id IN ({ids_sql})")))
-    if allowed is not None:
-        # filtered hybrid search: the predicate's id set prunes the
-        # CODES scan itself (broadcast semi-join ahead of the ADC
-        # kernel), so disallowed vectors never enter candidate
-        # generation — same pre-filter pattern as IVFIndex.search
-        if len(allowed.columns) != 1:
-            raise ValueError(
-                f"knn_ivf_pq(allowed=...): expected a single-column "
-                f"id DataFrame, got columns {allowed.columns}")
-        codes = codes.join(
-            F.broadcast(allowed.select(
-                F.col(allowed.columns[0]).alias(id_col))),
-            id_col, "semi")
-
-    def adc_topk(batches):
-        if residual:
-            (qids_l, qmat_l, pmap, books_l, cents_l,
-             rots_l, sq8_l) = bc.value
-        else:
-            qids_l, luts_l, pmap = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            pids = pdf["partition_id"].to_numpy()
-            all_codes = np.vstack(pdf["pq_codes"].to_numpy())
-            all_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            out = []
-            for pid in np.unique(pids):
-                qidx = pmap.get(int(pid))
-                if not qidx:
-                    continue
-                mask = pids == pid
-                cds, ids = all_codes[mask], all_ids[mask]
-                approx = np.zeros((len(qidx), cds.shape[0]))
-                if residual:
-                    qres = qmat_l[qidx] - cents_l[int(pid)]
-                    if sq8:
-                        # scalar quantizer: decode codes to residual
-                        # vectors (one multiply-add per dim) and take
-                        # exact squared L2 against q − c_p — no LUTs,
-                        # no codebooks
-                        dec = (cds * sq8_l["scale"]
-                               + sq8_l["vmin"])
-                        approx = l2_batch(qres, dec)
-                    else:
-                        # local sidecar: this partition's own books
-                        bk = (books_l.get(int(pid)) if local
-                              else books_l)
-                        if bk is None:
-                            continue
-                        rot = (rots_l.get(int(pid))
-                               if local and rots_l else None)
-                        if rot is not None:
-                            # full LOPQ: codes live in THIS cell's
-                            # rotated space
-                            qres = ((qres - rot["mean"])
-                                    @ rot["components"].T)
-                        for j in range(bk.shape[0]):
-                            lut_j = l2_batch(
-                                qres[:, j * dsub:(j + 1) * dsub],
-                                bk[j])
-                            approx += lut_j[:, cds[:, j]]
-                else:
-                    for j in range(luts_l.shape[0]):
-                        approx += luts_l[j][np.ix_(qidx, cds[:, j])]
-                kk = min(kk_cand, len(ids))
-                part = topk_cols_2d(approx, ids, kk)
-                out.append(pd.DataFrame({
-                    "query_id": np.repeat(qids_l[qidx], kk),
-                    id_col: ids[part].ravel(),
-                    "dist": np.take_along_axis(approx, part, axis=1)
-                              .ravel(),
-                }))
-            if out:
-                yield pd.concat(out)
-
-    # NOTE: must not reuse the name `local` here — adc_topk's closure
-    # reads the `local` FLAG, and cloudpickle captures the cell at
-    # pickle time; shadowing it with a DataFrame is a landmine
-    approx_scores = codes.mapInPandas(
-        adc_topk, f"query_id long, {id_col} long, dist double")
-    w = (Window.partitionBy("query_id")
-         .orderBy(F.col("dist").asc(), F.col(id_col).asc()))
-    cand = (approx_scores.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= kk_cand)
+    # filtered hybrid search: the predicate's id set prunes the CODES
+    # scan itself (broadcast semi-join ahead of the ADC kernel), so
+    # disallowed vectors never enter candidate generation — same
+    # pre-filter pattern as IVFIndex.search
+    codes = index._restrict_to_allowed(codes, allowed, "knn_ivf_pq")
+    cand = (scan_topk(codes, qids, qdata, score, kk_cand,
+                      width=qmat.shape[1] if sq8 else mm, id_col=id_col,
+                      vec_col="pq_codes", out_id_col=id_col,
+                      probe_map=probe_map)
             .select("query_id", id_col))
     out = exact_rerank(cand, index.read_corpus(), (qids, qmat), k,
                        id_col=id_col, vec_col=index.vec_col)
@@ -2427,12 +2347,6 @@ def knn_ivf_pq(index, queries, k: int = 10, target_recall: float = 0.9,
         out = (out.withColumn(
             "sim", 1 - (F.col("dist") * F.col("dist")) / 2)
             .select("query_id", id_col, "sim", "rank"))
-    meta = {
-        "nprobe": nprobe.tolist(),
-        "avg_nprobe": float(nprobe.mean()),
-        "avg_scanned": scanned / nq,
-        "n_partitions": len(index.part_ids),
-    }
     return out, meta
 
 
@@ -2693,11 +2607,11 @@ def knn_bq(corpus_df: DataFrame, queries, k: int = 10,
 
     1. encode the corpus to sign codes (narrow, codegen, no training),
     2. prerank by hamming distance code⊕query-code — packed uint64
-       XOR + byte-LUT popcount in NumPy inside mapInPandas, with
-       per-batch local top-(k·oversample) under the engine tie-break
-       (ham asc, id asc), exactly like ``_pq_adc_candidates``' ADC
-       scan; the global window then ranks only the ≤ partitions·k·
-       oversample survivors per query,
+       XOR + byte-LUT popcount in NumPy inside the shared map-side scan
+       (``scan_topk``), with per-batch local top-(k·oversample) under
+       the engine tie-break (ham asc, id asc), exactly like
+       ``_pq_adc_candidates``' ADC scan; the global window then ranks
+       only the ≤ partitions·k·oversample survivors per query,
     3. exact rerank of the top-(k·oversample) per query.
 
     Scale note (VERDICT r7): the previous shape windowed ALL n·nq
@@ -2711,13 +2625,10 @@ def knn_bq(corpus_df: DataFrame, queries, k: int = 10,
     hamming-on-signs is the coarsest prerank in the family, so it
     needs the largest candidate fraction — the price of 1-bit codes.
     """
-    import numpy as np
-    import pandas as pd
-
-    from quake_vector_search_spark.functions.vector import topk_cols_2d
     from quake_vector_search_spark.operators.knn import (
         _collect_queries,
         _empty_result,
+        scan_topk,
     )
 
     spark = corpus_df.sparkSession
@@ -2740,58 +2651,33 @@ def knn_bq(corpus_df: DataFrame, queries, k: int = 10,
             ws.append(acc - (1 << 64) if acc >= (1 << 63) else acc)
         qcodes.append(ws)
     qwords = np.asarray(qcodes, dtype=np.int64).view(np.uint64)
-    qids64 = np.asarray(qids, dtype=np.int64)
     kk_cand = k * oversample
-    bc = spark.sparkContext.broadcast((qids64, qwords))
     popcnt = np.array([bin(i).count("1") for i in range(256)],
                       dtype=np.uint8)
 
     enc = bq_encode(corpus_df, id_col=id_col, vec_col=vec_col, dim=dim)
 
-    def hamming_topk(batches):
-        qids_l, qw = bc.value          # [nq, nwords] uint64
-        nq = qids_l.shape[0]
-        for pdf in batches:
-            if len(pdf) == 0 or nq == 0:
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            codes = np.vstack(pdf["bq_code"].to_numpy()) \
-                .astype(np.int64).view(np.uint64)          # [n, nwords]
-            # XOR every code against every query code, popcount via a
-            # 256-entry byte LUT (numpy<2 has no bitwise_count), sum
-            # the 8·nwords bytes. Both the LUT gather AND the hamming
-            # matrix + top-k run per ≤64-query block (ADVICE r8: a
-            # full [nq, n] int64 matrix is multi-GB at 100k+ collected
-            # queries), so peak extra memory is the block's
-            # 64·n·nwords·64 B ≈ 40 MB at default Arrow batch sizes,
-            # independent of the collected query-set size. Per-block
-            # top-k selects the same rows as whole-matrix top-k —
-            # selection is per query row.
-            kk = min(kk_cand, len(ids))
-            out_q, out_i, out_h = [], [], []
-            for q0 in range(0, nq, 64):
-                x = qw[q0:q0 + 64, None, :] ^ codes[None, :, :]
-                ham = popcnt[x.view(np.uint8)].reshape(
-                    x.shape[0], len(ids), -1).sum(axis=2,
-                                                  dtype=np.int64)
-                part = topk_cols_2d(ham, ids, kk)
-                hk = np.take_along_axis(ham, part, axis=1)
-                out_q.append(np.repeat(qids_l[q0:q0 + 64], kk))
-                out_i.append(ids[part].ravel())
-                out_h.append(hk.ravel())
-            yield pd.DataFrame({
-                "query_id": np.concatenate(out_q),
-                id_col: np.concatenate(out_i),
-                "_ham": np.concatenate(out_h),
-            })
+    def hamming(qw, qpos, codes, _pid):
+        # XOR every code against every query code, popcount via a
+        # 256-entry byte LUT (numpy<2 has no bitwise_count), sum the
+        # 8·nwords bytes. The XOR and LUT gather run per ≤64-query
+        # block (ADVICE r8: over all queries at once they are
+        # 16·nwords bytes per (query, row), multi-GB at 100k+ collected
+        # queries); the assembled [nq, n] int32 matrix is half the
+        # float64 score matrix of the other scorers. Integer hamming is
+        # exact under any blocking.
+        qw = qw[qpos]
+        codes = codes.view(np.uint64)                      # [n, nwords]
+        ham = np.empty((qw.shape[0], codes.shape[0]), dtype=np.int32)
+        for q0 in range(0, qw.shape[0], 64):
+            x = qw[q0:q0 + 64, None, :] ^ codes[None, :, :]
+            ham[q0:q0 + 64] = popcnt[x.view(np.uint8)].reshape(
+                x.shape[0], codes.shape[0], -1).sum(axis=2, dtype=np.int64)
+        return ham
 
-    local = enc.mapInPandas(
-        hamming_topk, f"query_id long, {id_col} long, _ham long")
-    from pyspark.sql import Window
-    w = (Window.partitionBy("query_id")
-         .orderBy(F.col("_ham").asc(), F.col(id_col).asc()))
-    cand = (local.withColumn("_rk", F.row_number().over(w))
-            .where(F.col("_rk") <= kk_cand)
+    cand = (scan_topk(enc, qids, qwords, hamming, kk_cand, width=nwords,
+                      id_col=id_col, vec_col="bq_code", out_id_col=id_col,
+                      score_col="_ham")
             .select("query_id", id_col))
     return exact_rerank(cand, corpus_df, (qids, qmat), k,
                         id_col=id_col, vec_col=vec_col)
@@ -3310,23 +3196,23 @@ def pq_train_distributed(corpus_df: DataFrame, m: int = 8,
     # partial is bit-identical to the re-scanning form.
     from pyspark import StorageLevel
     samp_df = samp_df.persist(StorageLevel.MEMORY_AND_DISK)
-    _, Xi = _seeded_sample(samp_df, vec_col, id_col,
-                           min(init_n, sample_n), seed)
-    d = Xi.shape[1]
-    if d % m != 0:
-        raise ValueError(f"d={d} not divisible by m={m}")
-    dsub = d // m
-    ksub_eff = min(ksub, Xi.shape[0])
-    books = np.empty((m, ksub_eff, dsub), dtype=np.float64)
-    for j in range(m):
-        # 0 refinement iters: seeded init only — the distributed
-        # passes below ARE the Lloyd iterations
-        books[j], _ = local_kmeans(Xi[:, j * dsub:(j + 1) * dsub],
-                                   ksub_eff, 0, seed + 1 + j,
-                                   final_assign=False)
-
-    spark = corpus_df.sparkSession
     try:
+        _, Xi = _seeded_sample(samp_df, vec_col, id_col,
+                               min(init_n, sample_n), seed)
+        d = Xi.shape[1]
+        if d % m != 0:
+            raise ValueError(f"d={d} not divisible by m={m}")
+        dsub = d // m
+        ksub_eff = min(ksub, Xi.shape[0])
+        books = np.empty((m, ksub_eff, dsub), dtype=np.float64)
+        for j in range(m):
+            # 0 refinement iters: seeded init only — the distributed
+            # passes below ARE the Lloyd iterations
+            books[j], _ = local_kmeans(Xi[:, j * dsub:(j + 1) * dsub],
+                                       ksub_eff, 0, seed + 1 + j,
+                                       final_assign=False)
+
+        spark = corpus_df.sparkSession
         for _ in range(iters):
             bc = spark.sparkContext.broadcast(books)
 
@@ -3455,30 +3341,27 @@ def aniso_pq_train_distributed(corpus_df: DataFrame, m: int = 8,
     # trainer's note)
     from pyspark import StorageLevel
     samp_df = samp_df.persist(StorageLevel.MEMORY_AND_DISK)
-
-    # ---- init: plain per-chunk Lloyd's on a bounded driver sample
-    _, Xi = _seeded_sample(samp_df, vec_col, id_col,
-                           min(init_n, sample_n), seed)
-    if rot is not None:
-        Xi = (Xi - rot["mean"]) @ rot["components"].T
-    d = Xi.shape[1]
-    if d % m != 0:
-        raise ValueError(f"d={d} not divisible by m={m}")
-    dsub = d // m
-    ksub_eff = min(ksub, Xi.shape[0])
-    from quake_vector_search_spark.operators.kmeans import (
-        train_subspace_books,
-    )
-    # driver-side init → threaded independent per-chunk fits
-    books = train_subspace_books(Xi, m, ksub, kmeans_iters, seed,
-                                 parallel=True)
-    if eta == 1.0:
-        samp_df.unpersist()
-        return books
-
-    spark = corpus_df.sparkSession
-    stat_width = dsub * dsub + 2 * dsub
     try:
+        # ---- init: plain per-chunk Lloyd's on a bounded driver sample
+        _, Xi = _seeded_sample(samp_df, vec_col, id_col,
+                               min(init_n, sample_n), seed)
+        if rot is not None:
+            Xi = (Xi - rot["mean"]) @ rot["components"].T
+        d = Xi.shape[1]
+        if d % m != 0:
+            raise ValueError(f"d={d} not divisible by m={m}")
+        dsub = d // m
+        from quake_vector_search_spark.operators.kmeans import (
+            train_subspace_books,
+        )
+        # driver-side init → threaded independent per-chunk fits
+        books = train_subspace_books(Xi, m, ksub, kmeans_iters, seed,
+                                     parallel=True)
+        if eta == 1.0:
+            return books
+
+        spark = corpus_df.sparkSession
+        stat_width = dsub * dsub + 2 * dsub
         for _ in range(alts):
             bc = spark.sparkContext.broadcast((books, cents, rot))
 
@@ -3670,10 +3553,11 @@ def knn_pq_mips(corpus_df: DataFrame, queries, k: int = 10,
     from a prior ``aniso_pq_train`` (with the SAME eta — assignment
     and training share the loss) to amortize training across query
     batches."""
-    from quake_vector_search_spark.functions.vector import topk_cols_2d
+    from quake_vector_search_spark.functions.vector import dot_col
     from quake_vector_search_spark.operators.knn import (
         _collect_queries,
         _empty_result,
+        scan_topk,
     )
 
     spark = corpus_df.sparkSession
@@ -3689,51 +3573,11 @@ def knn_pq_mips(corpus_df: DataFrame, queries, k: int = 10,
     luts = np.stack([
         qmat[:, j * dsub:(j + 1) * dsub] @ books[j].T
         for j in range(mm)])                        # [m, nq, ksub]
-    bc = spark.sparkContext.broadcast(
-        (np.asarray(qids, dtype=np.int64), luts))
-    kk_cand = k * oversample
-
-    def adc_topk(batches):
-        qids_l, luts_l = bc.value
-        nq = qids_l.shape[0]
-        for pdf in batches:
-            if len(pdf) == 0 or nq == 0:
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            codes = np.vstack(pdf["pq_codes"].to_numpy())
-            approx = np.zeros((nq, codes.shape[0]))
-            for j in range(luts_l.shape[0]):
-                approx += luts_l[j][:, codes[:, j]]
-            kk = min(kk_cand, codes.shape[0])
-            part = topk_cols_2d(approx, ids, kk, descending=True)
-            sk = np.take_along_axis(approx, part, axis=1)
-            yield pd.DataFrame({
-                "query_id": np.repeat(qids_l, kk),
-                id_col: ids[part].ravel(),
-                "score": sk.ravel()})
-
-    local = enc.mapInPandas(
-        adc_topk, f"query_id long, {id_col} long, score double")
-    from pyspark.sql import Window
-    w = (Window.partitionBy("query_id")
-         .orderBy(F.col("score").desc(), F.col(id_col).asc()))
-    cand = (local.withColumn("_rk", F.row_number().over(w))
-            .where(F.col("_rk") <= kk_cand)
+    cand = (scan_topk(enc, qids, luts, _adc_scores, k * oversample,
+                      width=mm, id_col=id_col, vec_col="pq_codes",
+                      out_id_col=id_col, score_col="score",
+                      descending=True)
             .select("query_id", id_col))
     # exact MIPS rerank over the candidate-bounded set
-    from quake_vector_search_spark.functions.vector import dot_col
-    full = corpus_df.select(F.col(id_col), F.col(vec_col).alias("_fv"))
-    qdf = spark.createDataFrame(pd.DataFrame({
-        "query_id": np.asarray(qids, dtype=np.int64),
-        "embedding": [list(map(float, v)) for v in qmat]}))
-    qv = qdf.select("query_id",
-                    F.col("embedding").cast("array<double>")
-                    .alias("_qv"))
-    rer = (cand.join(full, id_col)
-           .join(F.broadcast(qv), "query_id")
-           .withColumn("score", dot_col("_fv", "_qv")))
-    w2 = (Window.partitionBy("query_id")
-          .orderBy(F.col("score").desc(), F.col(id_col).asc()))
-    return (rer.withColumn("rank", F.row_number().over(w2))
-            .where(F.col("rank") <= k)
-            .select("query_id", id_col, "score", "rank"))
+    return _rerank(cand, corpus_df, (qids, qmat), k, id_col, vec_col,
+                   "score", dot_col, descending=True)

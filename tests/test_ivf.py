@@ -1,6 +1,7 @@
 """IVF index tests (SURVEY.md §5.2/§5.3): APS properties, recall floor,
 build invariants, persistence round-trip."""
 
+import os
 import shutil
 
 import numpy as np
@@ -332,6 +333,28 @@ def test_calibration_persists_across_reload(spark, blob_index):
     blob_index.save_meta()
     re2 = IVFIndex.load(spark, blob_index.workdir)
     assert re2._calibration is None
+
+
+def test_calibration_token_is_path_independent(spark, tmp_path):
+    """A fit's state token names the index state, not the path it was
+    opened by: a fit taken on the index loaded by absolute path
+    restores on the same index loaded by a relative path, and one
+    delete still makes it stale."""
+    from quake_vector_search_spark.operators.workload import make_dataset
+
+    corpus = make_dataset(spark, 600, d=8, n_clusters=6, seed=5)
+    wd = tmp_path / "idx"
+    IVFIndex.build(corpus, str(wd), coarse_k=3, base_k=2)
+    absolute = IVFIndex.load(spark, str(wd))
+    cal = absolute.calibrate(n_queries=16)
+    # relative to the process cwd, which the JVM shares
+    relative = IVFIndex.load(spark, os.path.relpath(wd))
+    assert relative.version_dir != absolute.version_dir
+    relative.restore_calibration(cal)
+    assert relative._calibration == cal
+    relative.delete([0])
+    with pytest.raises(ValueError, match="state token mismatch"):
+        relative.restore_calibration(cal)
 
 
 def test_distributed_calibrated_matches_driver_policy(spark, blob_index):

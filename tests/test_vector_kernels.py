@@ -4,7 +4,14 @@ naive NumPy on seeded random inputs; top-k tie-break order."""
 import pytest
 import numpy as np
 
-from quake_vector_search_spark.functions.vector import l2_batch, topk_indices
+from quake_vector_search_spark.functions.vector import l2_batch, topk_cols_2d
+
+
+def _topk_row(arr, k):
+    """The engine's one top-k kernel on a single score row with
+    ids = arange(n), so the id tie-break is the index tie-break."""
+    arr = np.asarray(arr)
+    return topk_cols_2d(arr[None, :], np.arange(len(arr)), k)[0]
 
 
 def test_l2_batch_matches_naive():
@@ -25,15 +32,15 @@ def test_l2_batch_nonnegative_on_duplicates():
 
 def test_topk_ascending_and_tiebreak():
     arr = np.array([3.0, 1.0, 2.0, 1.0, 0.5])
-    idx = topk_indices(arr, 3)
+    idx = _topk_row(arr, 3)
     # 0.5@4, then tie 1.0@1 before 1.0@3 (index asc on ties)
     assert idx.tolist() == [4, 1, 3]
 
 
 def test_topk_k_larger_than_n():
     arr = np.array([2.0, 1.0])
-    assert topk_indices(arr, 10).tolist() == [1, 0]
-    assert topk_indices(arr, 0).tolist() == []
+    assert _topk_row(arr, 10).tolist() == [1, 0]
+    assert _topk_row(arr, 0).tolist() == []
 
 
 # ------------------------- property tests (hypothesis, SURVEY.md §5.2)
@@ -58,7 +65,7 @@ def test_l2_batch_property_matches_naive(x, y):
 @given(arr=arrays(np.float64, st.integers(1, 40), elements=_finite),
        k=st.integers(1, 50))
 def test_topk_property_sorted_prefix(arr, k):
-    idx = topk_indices(arr, k)
+    idx = _topk_row(arr, k)
     kk = min(k, len(arr))
     assert len(idx) == kk
     vals = arr[idx]
@@ -1869,3 +1876,69 @@ def test_group_slices_empty_labels():
 
     idx, starts, ends, uniq = _group_slices(np.empty(0, dtype=np.int64))
     assert idx.size == starts.size == ends.size == uniq.size == 0
+
+
+def test_arrow_decode_rejects_wrong_vector_length():
+    """The flat-buffer decode must refuse what np.vstack refused: a
+    ragged column reshaped by the flat length would silently realign
+    every row after the short one."""
+    import pyarrow as pa
+
+    from quake_vector_search_spark.functions.vector import (
+        arrow_vectors_to_matrix,
+    )
+
+    ok = pa.array([[1.0, 2.0], [3.0, 4.0]], type=pa.list_(pa.float32()))
+    np.testing.assert_array_equal(arrow_vectors_to_matrix(ok, 2),
+                                  [[1.0, 2.0], [3.0, 4.0]])
+    ragged = pa.array([[1.0, 2.0, 3.0], [4.0]],
+                      type=pa.list_(pa.float32()))
+    with pytest.raises(ValueError, match="must have length 2"):
+        arrow_vectors_to_matrix(ragged, 2)
+
+
+def test_shared_scan_rejects_vectors_off_query_dimension(spark):
+    """scan_topk decodes each batch against the query dimension: a
+    corpus vector of another length fails the search instead of being
+    reshaped into its neighbours' rows."""
+    from quake_vector_search_spark.operators.knn import knn_bruteforce
+
+    corpus = spark.createDataFrame(
+        [(0, [0.0, 0.0, 1.0]), (1, [1.0, 0.0, 0.0]), (2, [0.0, 1.0])],
+        "vec_id long, embedding array<float>")
+    queries = (np.array([7]), np.array([[0.0, 0.0, 1.0]]))
+    with pytest.raises(Exception, match="must have length 3"):
+        knn_bruteforce(corpus, queries, k=2).collect()
+    good = corpus.where("vec_id < 2")
+    rows = knn_bruteforce(good, queries, k=2).collect()
+    assert [r["vec_id"] for r in rows] == [0, 1]
+
+
+@pytest.mark.parametrize("trainer", ["pq", "aniso", "aniso_eta1"])
+def test_distributed_trainers_release_their_sample(spark, trainer):
+    """The distributed trainers persist their sample; every exit —
+    the d % m != 0 refusal and aniso's eta == 1 early return included —
+    must unpersist it, or it stays cached for the rest of the session."""
+    from quake_vector_search_spark.operators.quantization import (
+        aniso_pq_train_distributed,
+        pq_train_distributed,
+    )
+    from quake_vector_search_spark.operators.workload import make_dataset
+
+    corpus = make_dataset(spark, 300, d=8, n_clusters=4, seed=3)
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    was_empty = cache.isEmpty()
+    n_rdds = spark.sparkContext._jsc.getPersistentRDDs().size()
+    kw = dict(ksub=4, sample_n=200, init_n=100)
+    if trainer == "aniso_eta1":
+        books = aniso_pq_train_distributed(corpus, m=2, eta=1.0,
+                                           kmeans_iters=1, **kw)
+        assert books.shape == (2, 4, 4)
+    else:
+        train = (pq_train_distributed if trainer == "pq"
+                 else aniso_pq_train_distributed)
+        with pytest.raises(ValueError, match="not divisible"):
+            train(corpus, m=3, **kw)
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == n_rdds
+    if was_empty:
+        assert cache.isEmpty()
